@@ -143,14 +143,21 @@ def _enable_py4j_nodelay(spark: SparkSession) -> None:
 # read when the schema is passed explicitly — and EVERY query pays it per
 # table per run. Caching only the StructType (never data, never listings
 # of files we write) keeps every action computing from the parquet inputs.
-_SCHEMA_CACHE: dict[str, "object"] = {}
+# Keyed on (path, mtime): a table rewritten at the same path (a Spark
+# overwrite recreates the directory) is re-inferred, never read with a
+# stale schema.
+_SCHEMA_CACHE: dict[tuple[str, int], "object"] = {}
 
 
 def _read_parquet_pinned(spark: SparkSession, path: str) -> DataFrame:
-    sch = _SCHEMA_CACHE.get(path)
+    try:
+        key = (path, os.stat(path).st_mtime_ns)
+    except OSError:  # missing or non-local: Spark reports it
+        return spark.read.parquet(path)
+    sch = _SCHEMA_CACHE.get(key)
     if sch is None:
         sch = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[path] = sch
+        _SCHEMA_CACHE[key] = sch
     return spark.read.schema(sch).parquet(path)
 
 

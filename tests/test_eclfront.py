@@ -374,6 +374,194 @@ def test_merge_sample_requires_order(spark, cat):
     assert {r.o_orderkey for r in got.collect()} == want
 
 
+# Three sorted inputs with keys shared across inputs (never within one),
+# so the merged order is fully determined: key, then input index.
+_MERGE_INPUTS = {
+    "a": [(1, "a1"), (4, "a4"), (2, "a2"), (7, "a7")],
+    "b": [(2, "b2"), (1, "b1"), (5, "b5"), (4, "b4")],
+    "c": [(3, "c3"), (4, "c4"), (6, "c6"), (8, "c8")],
+}
+
+
+def _merge_ecl(body: str, sort_keys: str = "k") -> str:
+    defs = "\n".join(
+        f"{name} := SORT(DATASET(["
+        + ", ".join(f"{{{k}, '{v}'}}" for k, v in rows)
+        + f"], {{ unsigned k, string v }}), {sort_keys});"
+        for name, rows in _MERGE_INPUTS.items()
+    )
+    return defs + "\n" + body
+
+
+def _merged_model() -> list[str]:
+    """Python k-way merge: key order, equal keys in input order."""
+    tagged = [
+        (k, i, v)
+        for i, rows in enumerate(_MERGE_INPUTS.values())
+        for k, v in rows
+    ]
+    return [v for _, _, v in sorted(tagged)]
+
+
+def _run_v(spark, ecl: str) -> list[str]:
+    return [r.v for r in run_ecl(ecl, {}, spark=spark).collect()]
+
+
+@pytest.fixture
+def numbering_calls(monkeypatch):
+    """Counts two-phase numbering passes started while a query is built."""
+    from hpcc_platform_spark.operators import numbering
+
+    calls = []
+    orig = numbering.numbered
+
+    def counting(*args, **kwargs):
+        calls.append(args[1])
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(numbering, "numbered", counting)
+    return calls
+
+
+def test_merge_equal_keys_in_input_order_without_numbering(
+    spark, numbering_calls
+):
+    got = _run_v(spark, _merge_ecl("OUTPUT(MERGE(a, b, c, SORTED(k)));"))
+    assert got == _merged_model()
+    assert numbering_calls == []  # a lazy union: no compile-time job
+    # the set form mergenway uses
+    got = _run_v(spark, _merge_ecl("OUTPUT(MERGE([a, b, c], SORTED(k)));"))
+    assert got == _merged_model()
+
+
+def test_merge_without_sorted_inherits_first_input_keys(spark):
+    got = _run_v(spark, _merge_ecl("OUTPUT(MERGE(a, b, c));"))
+    assert got == _merged_model()
+
+
+def test_merge_order_survives_filter_and_table(spark):
+    ecl = _merge_ecl(
+        """
+        m := MERGE(a, b, c, SORTED(k));
+        OUTPUT(TABLE(m(k > 1, k < 8), { v, k2 := k * 2 }));
+        """
+    )
+    rows = run_ecl(ecl, {}, spark=spark).collect()
+    want = [v for v in _merged_model() if v[1] not in "18"]
+    assert [r.v for r in rows] == want
+    assert [r.k2 for r in rows] == [2 * int(v[1]) for v in want]
+
+
+def test_merge_inputs_ordered_finer_than_keys_keep_their_order(
+    spark, numbering_calls
+):
+    """Inputs sorted by (k, v DESC) merged on k alone: each input's
+    within-key order must survive, so each input is numbered by its own
+    order (the per-input numbering path)."""
+    ecl = """
+    a := SORT(DATASET([{1, 'az'}, {1, 'aa'}, {2, 'am'}],
+                      { unsigned k, string v }), k, -v);
+    b := SORT(DATASET([{1, 'bb'}, {2, 'bc'}, {1, 'by'}],
+                      { unsigned k, string v }), k, -v);
+    OUTPUT(MERGE(a, b, SORTED(k)));
+    """
+    assert _run_v(spark, ecl) == ["az", "aa", "by", "bb", "am", "bc"]
+    assert len(numbering_calls) == 2
+
+
+def test_merge_dedup_keeps_earliest_input(spark):
+    got = _run_v(spark, _merge_ecl("OUTPUT(MERGE(a, b, c, SORTED(k), DEDUP));"))
+    first: dict[str, str] = {}
+    for v in _merged_model():
+        first.setdefault(v[1], v)
+    assert got == list(first.values())
+    assert got == ["a1", "a2", "c3", "a4", "b5", "c6", "a7", "c8"]
+
+
+def _enth_model(n: int, num: int, den: int | None, which: int) -> list[int]:
+    """The reference's ENTH accumulator loop (thenthslave.cpp): 0-based
+    positions kept out of n rows."""
+    import math
+
+    if num == 0:
+        return []
+    d = n if den is None else (den or 1)
+    counter = ((which - 1) * math.gcd(num, d)) % d
+    keep = []
+    for i in range(n):
+        counter += num
+        if counter >= d:
+            counter %= d
+            keep.append(i)
+    return keep
+
+
+def test_sample_and_enth_over_merge_match_positional_model(
+    spark, numbering_calls
+):
+    merged = _merged_model()
+    n = len(merged)
+    cases = {
+        "SAMPLE(m, 3)": [i for i in range(n) if (i + 1) % 3 == 1],
+        "SAMPLE(m, 4, 2)": [i for i in range(n) if (i + 1) % 4 == 2],
+        "ENTH(m, 3, 7, 2)": _enth_model(n, 3, 7, 2),
+        "ENTH(m, 5)": _enth_model(n, 5, None, 1),
+    }
+    for call, positions in cases.items():
+        numbering_calls.clear()
+        ecl = _merge_ecl(f"m := MERGE(a, b, c, SORTED(k));\nOUTPUT({call});")
+        assert _run_v(spark, ecl) == [merged[i] for i in positions], call
+        assert len(numbering_calls) == 1, call
+
+
+def test_enth_without_denominator_uses_the_row_count(spark):
+    rows = ", ".join("{%d}" % v for v in (7, 3, 10, 1, 9, 2, 8, 5, 4, 6))
+    ecl = f"""
+    d := DATASET([{rows}], {{ unsigned v }});
+    OUTPUT(ENTH(SORT(d, v), 3));
+    """
+    got = [r.v for r in run_ecl(ecl, {}, spark=spark).collect()]
+    # (i * 3) mod 10 < 3 for 1-based i: positions 4, 7 and 10
+    assert got == [4, 7, 10]
+    assert got == [i + 1 for i in _enth_model(10, 3, None, 1)]
+
+
+def test_dedup_keep_count_constant_or_computed(spark):
+    """KEEP(n) takes a folded constant or a computed scalar alike."""
+    body = """
+    d := SORT(DATASET([{1, 'a'}, {1, 'b'}, {1, 'c'}, {2, 'd'}, {3, 'e'},
+                       {3, 'f'}, {3, 'g'}], { unsigned k, string v }), k, v);
+    two := COUNT(DATASET([{5}, {6}], { unsigned x }));
+    OUTPUT(DEDUP(d, k, KEEP(N)));
+    """
+    for n in ("2", "two"):
+        got = _run_v(spark, body.replace("KEEP(N)", f"KEEP({n})"))
+        assert got == ["a", "b", "d", "e", "f"], n
+
+
+def test_merge_sample_construction_job_budget(spark, sf_dir):
+    """Building ecl_front_merge_sample runs one numbering pass (SAMPLE's)
+    plus the inputs' range samplings: at most 9 Spark jobs, down from
+    21 when MERGE numbered every input and the union."""
+    from hpcc_platform_spark.operators.numbering import (
+        release_numbering_caches,
+    )
+    from hpcc_platform_spark.queries import REGISTRY, tables
+
+    tables(spark, sf_dir, "orders")  # schema inference is not construction
+    sc = spark.sparkContext
+    group = "ecl_front_merge_sample-construct"
+    sc.setJobGroup(group, group)
+    try:
+        REGISTRY["ecl_front_merge_sample"].fn(spark, sf_dir)
+    finally:
+        sc._jsc.clearJobGroup()
+        release_numbering_caches()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 9, len(jobs)
+
+
 def test_limit_guard(spark, cat):
     from hpcc_platform_spark.operators.limit import LimitExceeded
 

@@ -285,6 +285,22 @@ def test_read_table_events_branches_on_observed_ts_dtype(spark, sf_dir, tmp_path
     assert isinstance(r.ts, datetime.datetime)
 
 
+def test_read_table_sees_a_table_rewritten_at_the_same_path(spark, tmp_path):
+    """The pinned-schema cache is keyed on (path, mtime): a parquet table
+    rewritten in place with an extra column is read with its new schema."""
+    from hpcc_platform_spark.session import read_table
+
+    path = os.path.join(str(tmp_path), "t.parquet")
+    spark.range(3).write.mode("overwrite").parquet(path)
+    assert read_table(spark, str(tmp_path), "t").columns == ["id"]
+    spark.range(3).withColumn("x", F.col("id") * 2).write.mode(
+        "overwrite"
+    ).parquet(path)
+    again = read_table(spark, str(tmp_path), "t")
+    assert again.columns == ["id", "x"]
+    assert sorted(r.x for r in again.collect()) == [0, 2, 4]
+
+
 def test_scan_aggregate_pushes_into_footers(spark, sf_dir):
     """COUNT/MIN/MAX must be answered by the scan itself (PushedAggregation
     in the V2 parquet scan — TAKindexcount/TAKindexaggregate fusion), and
