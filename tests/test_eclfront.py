@@ -175,8 +175,10 @@ def test_grouped_table_still_groups_after_project_form(spark, cat):
 
 def test_parser_never_crashes_on_garbage(spark, cat):
     """Any input either parses or raises EclSyntaxError — no other
-    exception types, no hangs (parser totality)."""
+    exception types, no hangs (parser totality): each input settles
+    within 10 s, so garbage never runs minutes of driver work first."""
     import random
+    import time
 
     from hpcc_platform_spark.eclfront import _lex
 
@@ -195,6 +197,7 @@ def test_parser_never_crashes_on_garbage(spark, cat):
     ]
     for _ in range(300):
         txt = " ".join(rnd.choice(frags) for _ in range(rnd.randint(1, 25)))
+        t0 = time.perf_counter()
         try:
             run_ecl(txt, cat)
         except (EclSyntaxError, LimitExceeded, AnalysisException):
@@ -203,6 +206,7 @@ def test_parser_never_crashes_on_garbage(spark, cat):
             # Catalyst resolution error (column from the wrong table) -
             # both are clean rejections, not parser escapes
             pass
+        assert time.perf_counter() - t0 < 10, txt
     # the lexer itself rejects unknown bytes with a position
     with pytest.raises(EclSyntaxError, match="cannot lex"):
         _lex("OUTPUT(@!#)")
@@ -955,3 +959,281 @@ def test_fold_rows_cap_guards_single_stream(spark, monkeypatch):
     out = eclfront.run_ecl_actions(ecl, {}, spark=spark)[-1]
     with pytest.raises(Exception, match="single-stream cap"):
         out.collect()
+
+
+# ---- global hoist: a global dataset read inside a per-row child query ----
+# The reference evaluates the global once and hands the child query one
+# serialized row set (ExplicitGlobalTransformer, hqlhoist.cpp); here that
+# is one array<struct> literal built by _Parser._global_literal_array.
+
+
+@pytest.fixture
+def hoists(monkeypatch):
+    """Counts global datasets hoisted into a child query as literals."""
+    from hpcc_platform_spark import eclfront
+
+    calls = []
+    orig = eclfront._Parser._global_literal_array
+
+    def counting(self, frame):
+        calls.append(frame)
+        return orig(self, frame)
+
+    monkeypatch.setattr(eclfront._Parser, "_global_literal_array", counting)
+    return calls
+
+
+def _rows(spark, ecl: str, cat: dict | None = None) -> list[tuple]:
+    return [tuple(r) for r in run_ecl(ecl, cat or {}, spark=spark).collect()]
+
+
+_PARENTS = """
+inRec := RECORD unsigned i; END;
+ps := DATASET([{1}, {2}], inRec);
+"""
+
+
+def test_dataset_read_as_a_value(spark):
+    ids = """
+    idRec := RECORD unsigned id; END;
+    ids := DATASET([{1}, {2}, {3}], idRec);
+    emptyIds := DATASET([], idRec);
+    """
+    assert _rows(spark, ids + "OUTPUT(ids(ids != emptyIds));") == [
+        (1,), (2,), (3,)
+    ]
+    assert _rows(spark, ids + "OUTPUT(ids(ids = emptyIds));") == []
+    assert _rows(spark, ids + "OUTPUT(ids(ids = ids));") == [(1,), (2,), (3,)]
+
+
+_TYPED = """
+childRec := RECORD unsigned1 c; END;
+rec := RECORD DECIMAL10_2 d; STRING10 s; UNSIGNED8 u; REAL r;
+  DATASET(childRec) kids; END;
+src := DATASET([{1.25, 'ab', 18446744073709551615, 2.5, [{1}, {2}]},
+                {-3.5, 'xyz', 9223372036854775808, -0.125, []}], rec);
+"""
+
+
+def test_postfix_filter_over_hoisted_rows(spark, hoists):
+    for cond, n in (
+        ("d > 0", 1),
+        ("s = 'xyz'", 1),
+        ("COUNT(kids) = 2", 1),
+        ("r < 100", 2),
+        ("d > 100", 0),
+    ):
+        ecl = _TYPED + _PARENTS + f"""
+        outRec := RECORD unsigned i; unsigned n; END;
+        outRec t(inRec l) := TRANSFORM
+          SELF.n := COUNT(TABLE(src({cond}), {{d}}));
+          SELF := l;
+        END;
+        OUTPUT(PROJECT(ps, t(LEFT)));
+        """
+        assert _rows(spark, ecl) == [(1, n), (2, n)], cond
+    assert len(hoists) == 5
+
+
+def test_typed_round_trip_through_inline_dataset_and_hoist(spark, hoists):
+    """DECIMAL, padded STRING10, UNSIGNED8 above 2^63, REAL (NaN, inf
+    and NULL included) and a child dataset keep their values through an
+    inline DATASET and through the hoist into a child query."""
+    import math
+    from decimal import Decimal
+
+    want = [
+        (Decimal("1.25"), "ab        ", 2**64 - 1, 2.5, [(1,), (2,)]),
+        (Decimal("-3.50"), "xyz       ", 2**63, -0.125, []),
+    ]
+    assert _rows(spark, _TYPED + "OUTPUT(src);") == want
+    assert not hoists
+    ecl = _TYPED + _PARENTS + """
+    outRec := RECORD unsigned i; DATASET(rec) h; END;
+    outRec t(inRec l) := TRANSFORM
+      SELF.h := TABLE(src, {d, s, u, r, kids});
+      SELF := l;
+    END;
+    OUTPUT(PROJECT(ps, t(LEFT)));
+    """
+    got = _rows(spark, ecl)
+    assert [(i, [tuple(e) for e in h]) for i, h in got] == [
+        (1, want), (2, want)
+    ]
+    assert len(hoists) == 1
+
+    reals = spark.createDataFrame(
+        [(1, float("nan")), (2, float("-inf")), (3, None)], "k long, r double"
+    )
+    ecl_r = _PARENTS + """
+    rrec := RECORD integer k; REAL r; END;
+    outRec := RECORD unsigned i; DATASET(rrec) h; END;
+    outRec t(inRec l) := TRANSFORM
+      SELF.h := TABLE(reals, {k, r});
+      SELF := l;
+    END;
+    OUTPUT(PROJECT(ps, t(LEFT)));
+    """
+    (_, h), _second = _rows(spark, ecl_r, {"reals": reals})
+    assert [e.k for e in h] == [1, 2, 3]
+    assert math.isnan(h[0].r) and h[1].r == float("-inf") and h[2].r is None
+
+
+def test_grouped_hoist_counts_groups_named_or_not(spark, hoists):
+    """TABLE(grouped hoisted global, {[name :=] COUNT(GROUP)}) yields one
+    row per group, whether or not the count is named."""
+    base = """
+    rec := RECORD unsigned k; END;
+    dd := DATASET([{1}, {1}, {2}], rec);
+    gr := GROUP(SORT(dd, k), k) : GLOBAL;
+    pr := RECORD unsigned id; unsigned n; unsigned total; END;
+    p := DATASET([{1, 0, 0}], pr);
+    """
+    for member in ("COUNT(GROUP)", "cnt := COUNT(GROUP)"):
+        ecl = base + f"""
+        pr t(pr l) := TRANSFORM
+          SELF.n := COUNT(TABLE(gr, {{{member}}}));
+          SELF.total := SUM(TABLE(gr, {{{member}}}), cnt);
+          SELF := l;
+        END;
+        OUTPUT(PROJECT(p, t(LEFT)));
+        """
+        assert _rows(spark, ecl) == [(1, 2, 3)], member
+    assert hoists
+
+
+def _bare_parser():
+    from hpcc_platform_spark import eclfront
+
+    parser = eclfront._Parser.__new__(eclfront._Parser)
+    parser._grouped = {}
+    parser._ds_fields = {}
+    return parser
+
+
+def test_hoist_caps_raise_typed_errors(spark):
+    """The global hoist caps at 10,000 rows (EclSyntaxError) and the
+    correlated literal at 5,000 rows (EclFailError); at the cap both
+    carry every row."""
+    from hpcc_platform_spark.eclfront import EclFailError
+
+    parser = _bare_parser()
+
+    def size(arr):
+        return spark.range(1).select(F.size(arr)).head()[0]
+
+    def keys(n):
+        return spark.range(n).select(F.col("id").alias("k"))
+
+    with pytest.raises(EclSyntaxError, match="10,000-row"):
+        parser._global_literal_array(keys(10_001))
+    arr, fields = parser._global_literal_array(keys(10_000))
+    assert size(arr) == 10_000 and [f[0] for f in fields] == ["k"]
+    with pytest.raises(EclFailError, match="5000 rows"):
+        parser._ds_literal_array(keys(5_001))
+    arr, fields = parser._ds_literal_array(keys(5_000))
+    assert size(arr) == 5_000 and fields == [("k", "double", None, None)]
+    assert spark.range(1).select(arr[4_999]["k"]).head()[0] == 4_999.0
+
+
+def test_hoist_py4j_budget(spark, sf_dir, monkeypatch):
+    """Hoisting sf0.001 lineitem (6,000 rows x 11 fields) is one capped
+    collect plus one literal: a bounded number of py4j round trips, not
+    one literal expression per cell. Only this thread's commands count:
+    py4j's finalizer worker thread sends the deletions of earlier tests'
+    objects whenever it gets to them."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    n_rows = lineitem.count()
+    parser = _bare_parser()
+    calls = []
+    orig = ClientServerConnection.send_command
+
+    me = threading.get_ident()
+
+    def counting(self, *args, **kwargs):
+        if threading.get_ident() == me:
+            calls.append(1)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    try:
+        arr, fields = parser._global_literal_array(lineitem)
+    finally:
+        monkeypatch.undo()
+    assert len(calls) <= 100, len(calls)
+    assert len(fields) == len(lineitem.columns)
+    assert spark.range(1).select(F.size(arr)).head()[0] == n_rows
+
+
+def test_inline_row_literal_fills_declared_defaults(spark):
+    """An omitted trailing field takes its declared default in the main
+    inline DATASET and in a row-context one (SELF.kids := DATASET(...));
+    with no default declared both raise."""
+    for age in (" := 25", ""):
+        names = f"""
+        namesRec := RECORD string10 fn; string10 ln; integer2 age{age}; END;
+        """
+        main = names + "OUTPUT(DATASET([{'A', 'B'}, {'C', 'D', 3}], namesRec));"
+        row = names + """
+        pr := RECORD unsigned id; DATASET(namesRec) kids; END;
+        p := DATASET([{1, []}], pr);
+        pr t(pr l) := TRANSFORM
+          SELF.kids := DATASET([{'X', 'Z'}], namesRec);
+          SELF := l;
+        END;
+        OUTPUT(PROJECT(p, t(LEFT)));
+        """
+        if not age:
+            for ecl in (main, row):
+                with pytest.raises(EclSyntaxError, match="omits 'age'"):
+                    _rows(spark, ecl)
+            continue
+        assert _rows(spark, main) == [
+            ("A         ", "B         ", 25),
+            ("C         ", "D         ", 3),
+        ]
+        ((pid, kids),) = _rows(spark, row)
+        assert pid == 1 and [tuple(k) for k in kids] == [
+            ("X         ", "Z         ", 25)
+        ]
+
+
+def test_driver_literal_fallbacks_build_one_literal(spark):
+    """Contexts that cannot re-base their frame fall back to one capped
+    driver literal: the correlated filter's map<key, rows> and
+    SET(ds, expr)'s typed array."""
+    from hpcc_platform_spark import eclfront
+    from hpcc_platform_spark.sources.inline import inline_dataset
+
+    child = inline_dataset(
+        spark,
+        [(1, 10, "x"), (1, 11, "y"), (3, 30, "z"), (4, 40, "w"), (None, 50, "n")],
+        "ck long, v long, tag string",
+    )
+    parent = spark.range(1, 4).select(F.col("id").alias("k"))
+
+    def parser(src):
+        return eclfront._Parser(
+            eclfront._lex(src), {"c": child}, None, spark, src=src
+        )
+
+    hits0 = getattr(eclfront._Parser, "_corr_fallback_hits", 0)
+    arr, fields = parser("c(ck = k)")._corr_filter_array(parent)
+    assert eclfront._Parser._corr_fallback_hits == hits0 + 1
+    assert [f[:2] for f in fields] == [
+        ("ck", "double"), ("v", "double"), ("tag", "string")
+    ]
+    got = parent.select("k", arr.alias("a")).orderBy("k").collect()
+    assert [(r.k, sorted((e.v, e.tag) for e in r.a)) for r in got] == [
+        (1, [(10.0, "x"), (11.0, "y")]), (2, []), (3, [(30.0, "z")])
+    ]
+
+    for src, want in (("SET(c, v * 2)", [20, 22, 60, 80, 100]),
+                      ("SET(c(v > 100), v)", [])):
+        p = parser(src)
+        one = p._dummy()
+        assert one.select(p.value(one).alias("s")).head().s == want, src

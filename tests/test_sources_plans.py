@@ -499,11 +499,11 @@ def test_index_bloom_filter_written_and_lookup_pushed(spark, tmp_path):
 
 
 def test_inline_dataset_lowers_literals_to_jvm_plan(spark):
-    """r17: inline_dataset must build a pure-JVM literal plan (no
-    Python-RDD scan — `Scan ExistingRDD` re-runs a Python worker
-    handshake per partition per action) whenever the rows are literal-
-    expressible, with exact value/type parity against createDataFrame,
-    and fall back to createDataFrame for shapes literals can't express."""
+    """inline_dataset must build a pure-JVM literal plan (no Python-RDD
+    scan — `Scan ExistingRDD` re-runs a Python worker handshake per
+    partition per action) for every shape, nested structs and empty
+    rows included, with exact value/type parity against
+    createDataFrame."""
     import datetime
     import decimal
 
@@ -531,10 +531,50 @@ def test_inline_dataset_lowers_literals_to_jvm_plan(spark):
     assert got.dtypes == ref.dtypes
     assert got.collect() == ref.collect()
 
-    # Shapes literals can't express fall back to createDataFrame, still correct.
+    def jvm_only(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return "ExistingRDD" not in plan and "EvalPython" not in plan
+
     nested = inline_dataset(
         spark, [((1, "x"),)], "st struct<a:int,b:string>"
     )
+    assert jvm_only(nested)
     assert nested.head().st.asDict() == {"a": 1, "b": "x"}
     empty = inline_dataset(spark, [], "x int, y string")
+    assert jvm_only(empty)
     assert empty.count() == 0 and empty.schema.fieldNames() == ["x", "y"]
+
+
+def test_rows_literal_encoder_rules(spark):
+    """rows_literal: structs as tuple, Row or dict; NaN/±inf and
+    unsigned-64 decimals exact; atomic element types; a value that does
+    not fit its declared type raises (FAILFAST), as a map type does."""
+    import pytest
+    from pyspark.sql import Row
+    from pyspark.sql import types as T
+
+    from hpcc_platform_spark.sources.inline import (
+        inline_dataset,
+        parse_schema,
+        rows_literal,
+    )
+
+    st = parse_schema("a long, f double, u decimal(20,0)")
+    rows = [
+        (1, float("nan"), 2**64 - 1),
+        Row(f=float("inf"), a=2, u=0),
+        {"a": 3, "f": float("-inf")},
+    ]
+    got = spark.range(1).select(F.inline(rows_literal(rows, st))).collect()
+    assert [r.a for r in got] == [1, 2, 3]
+    assert got[0].f != got[0].f and got[1].f == float("inf")
+    assert got[2].f == float("-inf") and got[2].u is None
+    assert got[0].u == 2**64 - 1
+    vals = rows_literal([3, None, 1], T.LongType())
+    assert spark.range(1).select(vals.alias("v")).head().v == [3, None, 1]
+    with pytest.raises(Exception, match="MALFORMED_RECORD"):
+        spark.range(1).select(rows_literal([(2**40,)], parse_schema("i int"))).collect()
+    with pytest.raises(TypeError):
+        inline_dataset(spark, [(1.5,)], "i long")
+    with pytest.raises(TypeError, match="map"):
+        rows_literal([({"k": 1},)], parse_schema("m map<string,int>"))
