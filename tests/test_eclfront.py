@@ -1237,3 +1237,124 @@ def test_driver_literal_fallbacks_build_one_literal(spark):
         p = parser(src)
         one = p._dummy()
         assert one.select(p.value(one).alias("s")).head().s == want, src
+
+
+# ---- dataset facts carried through operators --------------------------------
+# Order, grouping and field facts ride from an operator's input to its
+# output. Each test below fails if one carry site drops its fact.
+
+
+def _ecl_rows(spark, ecl: str) -> list[list[tuple]]:
+    """Every action's rows, in action order."""
+    from hpcc_platform_spark.eclfront import run_ecl_actions
+
+    return [
+        [tuple(r) for r in out.collect()]
+        for out in run_ecl_actions(ecl, {}, spark=spark)
+    ]
+
+
+def _adjacent_groups(rows, key):
+    """GROUP(ds, key) without ALL: runs of adjacent equal keys."""
+    import itertools
+
+    return [list(g) for _, g in itertools.groupby(rows, key)]
+
+
+# each key in one run, runs not in key order
+_GV = [(3, "c"), (3, "a"), (3, "b"), (1, "z"), (1, "a"), (1, "m"), (2, "b"),
+       (2, "a")]
+
+
+def _gv_ecl(body: str) -> str:
+    rows = ", ".join(f"{{{g}, '{v}'}}" for g, v in _GV)
+    return (
+        f"d := DATASET([{rows}], {{ unsigned g, string v }});\n"
+        f"gd := GROUP(d, g);\n{body}"
+    )
+
+
+def test_sort_over_group_sorts_within_groups_in_stream_position(spark):
+    groups = _adjacent_groups(_GV, lambda r: r[0])
+    sorted_rows, counts = _ecl_rows(spark, _gv_ecl(
+        "s := SORT(gd, v);\n"
+        "OUTPUT(s);\n"
+        "OUTPUT(TABLE(s, { g, n := COUNT(GROUP) }));"
+    ))
+    assert sorted_rows == [r for g in groups for r in sorted(g, key=lambda r: r[1])]
+    assert sorted(counts) == sorted((g[0][0], len(g)) for g in groups)
+
+
+def test_join_keeps_left_grouping(spark):
+    left = [(1, "x"), (1, "y"), (2, "z"), (3, "w"), (3, "q"), (3, "r"),
+            (4, "s")]
+    right = [1, 3, 4]
+    ecl = (
+        "l := DATASET(["
+        + ", ".join(f"{{{k}, '{a}'}}" for k, a in left)
+        + "], { unsigned k, string a });\n"
+        "r := DATASET([" + ", ".join(f"{{{k}}}" for k in right)
+        + "], { unsigned k });\n"
+        "j := JOIN(GROUP(l, k), r, LEFT.k = RIGHT.k);\n"
+        "OUTPUT(TABLE(j, { n := COUNT(GROUP) }));"
+    )
+    [got] = _ecl_rows(spark, ecl)
+    want = [
+        len(g) for g in _adjacent_groups(left, lambda r: r[0])
+        if g[0][0] in right
+    ]
+    assert sorted(n for (n,) in got) == sorted(want)
+
+
+def test_filter_over_group_then_having(spark):
+    [got] = _ecl_rows(spark, _gv_ecl(
+        "OUTPUT(HAVING(gd(v > 'a'), COUNT(GROUP) > 1));"
+    ))
+    want = []
+    for g in _adjacent_groups(_GV, lambda r: r[0]):
+        kept = [r for r in g if r[1] > "a"]
+        if len(kept) > 1:
+            want += kept
+    assert sorted(got) == sorted(want)
+
+
+_ENTH_VALS = (7, 3, 10, 1, 9, 2, 8, 5, 4, 6)
+
+
+def test_positional_slice_of_unsigned8_sort_keeps_field_types(spark):
+    from decimal import Decimal
+
+    rows = ", ".join("{%d}" % v for v in _ENTH_VALS)
+    [got] = _ecl_rows(spark, f"""
+    d := DATASET([{rows}], {{ UNSIGNED8 u }});
+    OUTPUT(SORT(d, u)[2..4]);
+    """)
+    want = sorted(_ENTH_VALS)[1:4]
+    assert got == [(Decimal(v),) for v in want]
+    assert all(type(v) is Decimal for (v,) in got)
+
+
+def test_written_file_keeps_order_for_sample_and_enth(spark):
+    rows = ", ".join("{%d}" % v for v in _ENTH_VALS)
+    outs = _ecl_rows(spark, f"""
+    d := DATASET([{rows}], {{ unsigned v }});
+    OUTPUT(SORT(d, v),,'facts_gate_file');
+    r := DATASET('facts_gate_file', {{ unsigned v }}, THOR);
+    OUTPUT(SAMPLE(r, 3, 2));
+    OUTPUT(ENTH(r, 3, 7, 2));
+    """)
+    ordered = sorted(_ENTH_VALS)
+    assert outs[1] == [(ordered[i],) for i in range(10) if (i + 1) % 3 == 2]
+    assert outs[2] == [(ordered[i],) for i in _enth_model(10, 3, 7, 2)]
+
+
+def test_when_over_sorted_frame_keeps_order_for_enth(spark):
+    rows = ", ".join("{%d}" % v for v in _ENTH_VALS)
+    count, got = _ecl_rows(spark, f"""
+    d := DATASET([{rows}], {{ unsigned v }});
+    w := WHEN(SORT(d, v), OUTPUT(COUNT(d)));
+    OUTPUT(ENTH(w, 3, 7, 2));
+    """)
+    ordered = sorted(_ENTH_VALS)
+    assert count == [(10,)]
+    assert got == [(ordered[i],) for i in _enth_model(10, 3, 7, 2)]
