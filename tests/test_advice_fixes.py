@@ -824,20 +824,23 @@ def test_corr_literal_fallback_rejects_nested_fields(spark):
     """r16 ADVICE: _ds_literal_array coerced unknown field types to
     double — a nested child-dataset column would become NULL silently.
     It must fail loudly instead."""
+    import weakref
+
     import pytest as _pt
 
     from hpcc_platform_spark import eclfront as ef
     from pyspark.sql import functions as F
 
     parser = ef._Parser.__new__(ef._Parser)
+    parser._ds_facts = weakref.WeakKeyDictionary()
     ds = spark.range(3).select(
         F.col("id").alias("a"),
         F.array(F.struct(F.col("id").alias("x"))).alias("kids"),
     )
-    parser._ds_fields = {
-        id(ds): [("a", "long", None, None),
-                 ("kids", "array<struct<x:bigint>>", None, None)]
-    }
+    parser._carry(ds, fields=[
+        ("a", "long", None, None),
+        ("kids", "array<struct<x:bigint>>", None, None),
+    ])
     with _pt.raises(ef.EclFailError, match="nested"):
         parser._ds_literal_array(ds)
 

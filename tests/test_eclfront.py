@@ -1103,11 +1103,12 @@ def test_grouped_hoist_counts_groups_named_or_not(spark, hoists):
 
 
 def _bare_parser():
+    import weakref
+
     from hpcc_platform_spark import eclfront
 
     parser = eclfront._Parser.__new__(eclfront._Parser)
-    parser._grouped = {}
-    parser._ds_fields = {}
+    parser._ds_facts = weakref.WeakKeyDictionary()
     return parser
 
 
@@ -1136,23 +1137,16 @@ def test_hoist_caps_raise_typed_errors(spark):
     assert spark.range(1).select(arr[4_999]["k"]).head()[0] == 4_999.0
 
 
-def test_hoist_py4j_budget(spark, sf_dir, monkeypatch):
-    """Hoisting sf0.001 lineitem (6,000 rows x 11 fields) is one capped
-    collect plus one literal: a bounded number of py4j round trips, not
-    one literal expression per cell. Only this thread's commands count:
-    py4j's finalizer worker thread sends the deletions of earlier tests'
-    objects whenever it gets to them."""
+def _send_command_counter(monkeypatch):
+    """Counts this thread's py4j commands (py4j's finalizer thread sends
+    the deletions of earlier tests' objects whenever it gets to them)."""
     import threading
 
     from py4j.clientserver import ClientServerConnection
 
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    n_rows = lineitem.count()
-    parser = _bare_parser()
     calls = []
-    orig = ClientServerConnection.send_command
-
     me = threading.get_ident()
+    orig = ClientServerConnection.send_command
 
     def counting(self, *args, **kwargs):
         if threading.get_ident() == me:
@@ -1160,6 +1154,17 @@ def test_hoist_py4j_budget(spark, sf_dir, monkeypatch):
         return orig(self, *args, **kwargs)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    return calls
+
+
+def test_hoist_py4j_budget(spark, sf_dir, monkeypatch):
+    """Hoisting sf0.001 lineitem (6,000 rows x 11 fields) is one capped
+    collect plus one literal: a bounded number of py4j round trips, not
+    one literal expression per cell."""
+    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    n_rows = lineitem.count()
+    parser = _bare_parser()
+    calls = _send_command_counter(monkeypatch)
     try:
         arr, fields = parser._global_literal_array(lineitem)
     finally:
@@ -1239,9 +1244,9 @@ def test_driver_literal_fallbacks_build_one_literal(spark):
         assert one.select(p.value(one).alias("s")).head().s == want, src
 
 
-# ---- dataset facts carried through operators --------------------------------
+# ---- dataset facts carried through operators -------------------------
 # Order, grouping and field facts ride from an operator's input to its
-# output. Each test below fails if one carry site drops its fact.
+# output. Each gate test below fails if one carry site drops its fact.
 
 
 def _ecl_rows(spark, ecl: str) -> list[list[tuple]]:
@@ -1281,7 +1286,9 @@ def test_sort_over_group_sorts_within_groups_in_stream_position(spark):
         "OUTPUT(s);\n"
         "OUTPUT(TABLE(s, { g, n := COUNT(GROUP) }));"
     ))
-    assert sorted_rows == [r for g in groups for r in sorted(g, key=lambda r: r[1])]
+    assert sorted_rows == [
+        r for g in groups for r in sorted(g, key=lambda r: r[1])
+    ]
     assert sorted(counts) == sorted((g[0][0], len(g)) for g in groups)
 
 
@@ -1358,3 +1365,93 @@ def test_when_over_sorted_frame_keeps_order_for_enth(spark):
     ordered = sorted(_ENTH_VALS)
     assert count == [(10,)]
     assert got == [(ordered[i],) for i in _enth_model(10, 3, 7, 2)]
+
+
+def test_dropped_frame_facts_leave_the_table(spark):
+    """Facts are keyed by the frame object and held weakly: once an
+    intermediate frame is collected its record is gone, so no later
+    frame can inherit it, and a freshly built frame starts with none."""
+    import gc
+
+    parser = _bare_parser()
+    base = spark.range(3)
+    kept, dropped = base.select("*"), base.select("*")
+    parser._carry(dropped, order=[F.col("id")], grouped=["id"])
+    parser._carry(kept, dropped, path=("p",))
+    assert parser._facts(kept).grouped == ["id"]
+    assert parser._facts(kept).path == ("p",)
+    del dropped
+    gc.collect()
+    assert list(parser._ds_facts.keys()) == [kept]
+    fresh = [base.select("*") for _ in range(50)]
+    assert all(parser._facts(f).order is None for f in fresh)
+    assert all(parser._facts(f).grouped is None for f in fresh)
+    assert parser._facts(None).fields is None
+
+
+# ---- construction cost of driver-held dictionaries and sets ----------
+
+
+def test_dictionary_probe_py4j_budget(spark, cat, monkeypatch):
+    """A dictionary probed with a non-constant key is one map literal,
+    and a key-field read one array literal: over a 1,000-entry
+    dictionary each builds in a bounded number of py4j round trips, not
+    one literal per entry."""
+    from hpcc_platform_spark import eclfront
+
+    orders = cat["orders"]
+    defs = """
+    dd := DICTIONARY(orders(o_orderkey < 1000),
+                     {o_orderkey => o_custkey, o_orderstatus});
+    OUTPUT(COUNT(orders));
+    """
+    p = eclfront._Parser(eclfront._lex(defs), cat, None, spark, src=defs)
+    p.program()
+    assert len(p.dicts["dd"]["keys"]) == 1_000
+    model = {
+        r.o_orderkey: (r.o_custkey, r.o_orderstatus)
+        for r in orders.where("o_orderkey < 1000").collect()
+    }
+    wants = {
+        "dd[o_orderkey].o_custkey": lambda k: model[k][0] if k in model else 0,
+        "dd[o_orderkey].o_orderstatus": (
+            lambda k: model[k][1] if k in model else ""
+        ),
+        "dd[o_orderkey].o_orderkey": lambda k: k if k in model else 0,
+    }
+    for expr, want in wants.items():
+        p.toks, p.i = eclfront._lex(expr), 0
+        calls = _send_command_counter(monkeypatch)
+        try:
+            col = p.value(orders)
+        finally:
+            monkeypatch.undo()
+        assert len(calls) <= 100, (expr, len(calls))
+        got = orders.select("o_orderkey", col.alias("v")).collect()
+        assert len(got) == orders.count()
+        assert all(r.v == want(r.o_orderkey) for r in got), expr
+
+
+def test_set_dataset_form_runs_one_job(spark):
+    """SET(ds, expr) and SET(ds(filter), field) are the dataset form,
+    told from the tokens: one capped collect while the query is built,
+    not a wasted child-form hoist of ds first."""
+    from hpcc_platform_spark import eclfront
+
+    defs = "c := DATASET([{3}, {1}, {2}], {unsigned v});\nOUTPUT(c);"
+    sc = spark.sparkContext
+    for i, (src, want) in enumerate((("SET(c, v * 2)", [6, 2, 4]),
+                                     ("SET(c(v > 1), v)", [3, 2]))):
+        p = eclfront._Parser(eclfront._lex(defs), {}, None, spark, src=defs)
+        p.program()
+        one = p._dummy()
+        p.toks, p.i = eclfront._lex(src), 0
+        group = f"set-dataset-form-construct-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            col = p.value(one)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, src
+        assert one.select(col.alias("s")).head().s == want, src
