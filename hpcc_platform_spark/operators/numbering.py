@@ -35,6 +35,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..sources.inline import rows_literal
 
 PID = "__pid__"
 
@@ -146,11 +149,18 @@ def ranged_partitions(
     return ranged, counts, offsets
 
 
+_OFFSET_ENTRY = T.StructType(
+    [T.StructField("pid", T.IntegerType()), T.StructField("off", T.LongType())]
+)
+
+
 def _offset_col(offsets: dict[int, int]) -> Column:
+    """``offsets[__pid__]`` (0 for a partition with no rows): one map
+    literal, a constant number of py4j calls for any partition count."""
     if not offsets:
         return F.lit(0)
-    pairs = [x for pid, off in offsets.items() for x in (F.lit(pid), F.lit(off))]
-    return F.coalesce(F.create_map(*pairs)[F.col(PID)], F.lit(0))
+    m = F.map_from_entries(rows_literal(list(offsets.items()), _OFFSET_ENTRY))
+    return F.coalesce(m[F.col(PID)], F.lit(0))
 
 
 def numbered(

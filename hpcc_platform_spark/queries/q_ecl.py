@@ -108,7 +108,8 @@ def ecl_front_scalar_count(spark, sf_dir):
 )
 def ecl_front_q3_shape(spark, sf_dir):
     """TPC-H Q3 written as plain ECL text and executed through the front
-    door: two LOOKUP joins, a grouped TABLE with a computed revenue
+    door: a LOOKUP join of the customer slice, a partitioned (un-flagged)
+    join of that result with lineitem, a grouped TABLE with a computed revenue
     aggregate, TOPN with tiebreak — same plan family as the DataFrame
     version (workload_shipping_priority), proving a real multi-join
     reference query runs verbatim."""
