@@ -34,7 +34,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     cumulative across rounds.
 
     Each callable first releases the numbering caches the PREVIOUS query
-    persisted (two-phase row numbering pins frames for plan reuse;
+    persisted (a global running ITERATE pins range-partitioned frames;
     operators/numbering.py) so a long driver run over many queries holds
     at most one query's caches at a time.
     """

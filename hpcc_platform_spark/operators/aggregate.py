@@ -16,7 +16,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hpcc_platform_spark.operators.numbering import numbered
+from hpcc_platform_spark.operators.numbering import global_row_number
 
 
 def global_agg(df: DataFrame, *aggs: Column) -> DataFrame:
@@ -58,15 +58,16 @@ def quantile_exact(
 
     The reference returns the ranked rows that split the sorted input into n
     equal parts (Roxie ccdserver.cpp:8921-9170). Exact distributed form:
-    two-phase global numbering (operators/numbering.py — range partition +
-    rank offsets, NO single-partition exchange), then pick the boundary row
-    of each tile by its exact global position (ntile semantics: the first
-    ``total % n`` tiles hold one extra row). For approximate at 100 TB scale
+    global numbering (operators/numbering.py — a global sort plus Spark's
+    distributed sequence, NO single-partition exchange), then pick the
+    boundary row of each tile by its exact global position (ntile
+    semantics: the first ``total % n`` tiles hold one extra row). The boundaries need the row
+    total as a Python value: one ``count()``. For approximate at 100 TB scale
     prefer ``percentile_approx`` — this exact form pays one global range
     sort, same as the reference's. ``tiebreak`` makes the order total.
     """
     order = [F.col(value_col)] + [F.col(c) for c in tiebreak]
-    ranked, total = numbered(df, order, name="__rn__")
+    total = df.count()
     base, rem = divmod(total, n_tiles)
     boundaries: dict[int, int] = {}
     for t in range(1, n_tiles):
@@ -80,7 +81,8 @@ def quantile_exact(
     pairs = [x for rn, t in boundaries.items() for x in (F.lit(rn), F.lit(t))]
     tile_col = F.create_map(*pairs)[F.col("__rn__")]
     return (
-        ranked.where(F.col("__rn__").isin(*boundaries))
+        global_row_number(df, order, name="__rn__")
+        .where(F.col("__rn__").isin(*boundaries))
         .select(tile_col.alias("tile"), F.col(value_col))
     )
 

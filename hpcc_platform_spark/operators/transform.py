@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from hpcc_platform_spark.operators.numbering import (
     PID,
     global_row_number,
-    numbered,
     ranged_partitions,
 )
 
@@ -50,7 +49,7 @@ def project_counter(
     """PROJECT with COUNTER (TAKcountproject :917) — global row numbering.
 
     The reference numbers rows in stream order; Spark needs an explicit total
-    order. Lowered to the two-phase range-partition + offset scheme in
+    order. Lowered to a global sort plus Spark's distributed sequence in
     ``operators/numbering.py`` (the reference's own msort rank-offset design,
     thorlcr/msort/tsortm.cpp:66,242) — no single-partition exchange, scales
     to arbitrary data sizes. Callers that can tolerate partition-local
@@ -155,7 +154,7 @@ def iterate_running(
         return out
 
     combine = combine or {}
-    ranged, _counts, _ = ranged_partitions(df, order_by)
+    ranged = ranged_partitions(df, order_by)
     totals = {
         r["__pid__"]: r
         for r in ranged.groupBy(PID)
@@ -355,40 +354,25 @@ def enth(
     """ENTH / deterministic SAMPLE (TAKenth :913, TAKsample :899).
 
     ECL's ENTH picks every interval-th record deterministically (not random
-    sampling). Needs a total order to be well-defined distributed; two-phase
+    sampling). Needs a total order to be well-defined distributed; globally
     numbered rows (numbering.py, no single-partition exchange) where
     rn % interval == which.
     """
-    out, _ = numbered(df, order_by, name="__rn__")
-    return (
-        out.where(F.col("__rn__") % interval == which % interval)
-        .drop("__rn__", PID)
-    )
+    out = global_row_number(df, order_by, name="__rn__")
+    return out.where(F.col("__rn__") % interval == which % interval).drop("__rn__")
 
 
 def selectnth(df: DataFrame, n: int, order_by: Sequence[str | Column]) -> DataFrame:
     """ds[n] (TAKselectn :912) — the single n-th row in the given order.
 
-    Scale path: range-partition + per-partition counts locate the ONE
-    partition containing position n; only that partition is scanned for the
-    local row_number (the reference seeks the n-th row of a single sorted
-    stream, thorlcr/activities/selectnth/ — this is the distributed analog).
+    Scale path: global numbering (a sort plus Spark's distributed sequence)
+    and a filter on the position; n past the row count gives an empty
+    frame of the same shape (the reference seeks the n-th row of a single
+    sorted stream, thorlcr/activities/selectnth/ — this is the distributed
+    analog).
     """
-    ranged, counts, offsets = ranged_partitions(df, order_by)
-    target = None
-    for pid in sorted(counts):
-        if offsets[pid] < n <= offsets[pid] + counts[pid]:
-            target = pid
-            break
-    if target is None:  # n exceeds the row count → empty, same shape
-        return df.limit(0)
-    w = Window.partitionBy(PID).orderBy(*_cols(order_by))
-    return (
-        ranged.where(F.col(PID) == target)
-        .withColumn("__rn__", F.row_number().over(w) + F.lit(offsets[target]))
-        .where(F.col("__rn__") == n)
-        .drop("__rn__", PID)
-    )
+    out = global_row_number(df, order_by, name="__rn__")
+    return out.where(F.col("__rn__") == n).drop("__rn__")
 
 
 def combine(
@@ -403,21 +387,18 @@ def combine(
     The reference zips two equal-length datasets row-by-row (Roxie
     ccdserver.cpp:14789) and errors on length mismatch. Spark has no stable
     positional identity across shuffles, so position is made explicit via
-    two-phase global numbering (numbering.py — no single-partition
-    exchange), then an equi-join on position. With ``strict`` (the
-    reference's semantics) a length mismatch raises instead of silently
-    truncating to the shorter side; the counts are free — the numbering
-    pass already computed them.
+    global numbering (numbering.py — no single-partition exchange), then an
+    equi-join on position. With ``strict`` (the reference's semantics) a
+    length mismatch raises instead of silently truncating to the shorter
+    side; that check counts each side once, while the query is built.
     """
-    lhs, n_left = numbered(df_left, order_left, name="__pos__")
-    rhs, n_right = numbered(df_right, order_right, name="__pos__")
-    if strict and n_left != n_right:
-        raise ValueError(
-            f"COMBINE length mismatch: left has {n_left} rows, right has "
-            f"{n_right} (reference TAKcombine requires equal lengths)"
-        )
-    return (
-        lhs.drop(PID)
-        .join(rhs.drop(PID), "__pos__", "inner")
-        .drop("__pos__")
-    )
+    if strict:
+        n_left, n_right = df_left.count(), df_right.count()
+        if n_left != n_right:
+            raise ValueError(
+                f"COMBINE length mismatch: left has {n_left} rows, right has "
+                f"{n_right} (reference TAKcombine requires equal lengths)"
+            )
+    lhs = global_row_number(df_left, order_left, name="__pos__")
+    rhs = global_row_number(df_right, order_right, name="__pos__")
+    return lhs.join(rhs, "__pos__", "inner").drop("__pos__")

@@ -152,7 +152,7 @@ def ecl_front_q3_shape(spark, sf_dir):
 def ecl_front_merge_sample(spark, sf_dir):
     """ECL text → MERGE of two sorted slices + positional SAMPLE — the
     front door tracks the merged order so SAMPLE is deterministic
-    (TAKmerge :937 + TAKsample :899 lowered through the two-phase
+    (TAKmerge :937 + TAKsample :899 lowered through the global
     numbering operator)."""
     from hpcc_platform_spark.eclfront import run_ecl
 
@@ -337,8 +337,8 @@ def prefix_join_atmost(spark, sf_dir):
     :1740; CRollingCache thsortu.cpp:67,110,1424-1506): LEFT.name[1..*]
     = RIGHT.name[1..*] matches on the shorter string's length with
     ATMOST(cond, 3) — the rolling-cache membership + whole-class
-    trimming semantics. Runs the eclfront physical operator (two-phase
-    global ranking + positional band join, _prefix_join_prepare /
+    trimming semantics. Runs the eclfront physical operator (global
+    ranking + positional band join, _prefix_join_prepare /
     _prefix_join_filter) over derived part-name prefixes; the DuckDB
     oracle replicates the same algorithm (union rank -> pos, band,
     composite prefix-diff v, membership, class trim) with window

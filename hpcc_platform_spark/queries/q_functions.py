@@ -574,7 +574,7 @@ def collated_sort_locale(spark, sf_dir):
     collation via Spark 4 collated strings — comparisons stay JVM-side,
     the range partitioner sorts under the collation, and DuckDB's ICU
     'de' collation is the independent oracle. Rank materialized through
-    the two-phase numbering so order is observable AND scale-safe."""
+    global numbering so order is observable AND scale-safe."""
     from hpcc_platform_spark.functions.collation import collated
     from hpcc_platform_spark.operators.numbering import global_row_number
 
@@ -582,7 +582,7 @@ def collated_sort_locale(spark, sf_dir):
         spark, list(enumerate(_COLLATION_NAMES)), "id int, name string"
     )
     return global_row_number(
-        df, [collated("name", "de"), "id"], name="pos", num_partitions=4
+        df, [collated("name", "de"), "id"], name="pos"
     ).select("id", "name", "pos")
 
 
@@ -909,7 +909,7 @@ def ebcdic_collated_sort(spark, sf_dir):
         spark, list(enumerate(_EBCDIC_FIXTURE)), "id int, s string"
     )
     return global_row_number(
-        df, [ebcdic_sort_key("s"), "id"], name="pos", num_partitions=4
+        df, [ebcdic_sort_key("s"), "id"], name="pos"
     ).select("id", "s", "pos")
 
 

@@ -26,8 +26,9 @@ from hpcc_platform_spark.sources.inline import inline_dataset
     category="sort",
 )
 def global_sort_rank(spark, sf_dir):
-    """Global SORT (TAKsort :889): two-phase range-partition numbering ≡ the
-    reference's sampled-split-point msort + rank-offset exchange
+    """Global SORT (TAKsort :889): a range-partitioned sort plus Spark's
+    distributed sequence ≡ the reference's sampled-split-point msort +
+    rank-offset exchange
     (thorlcr/msort/tsortm.cpp:66,242). The sort position is materialized so
     the oracle verifies total order; no single-partition exchange anywhere
     in the plan."""

@@ -88,6 +88,13 @@ def get_spark(app_name: str = "hpcc_platform_spark", cpus: int | None = None) ->
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Row numbering (operators/numbering.py) ends every execution with a
+    # WARN "clean up cached RDD" from this operator; it is routine.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.python.AttachDistributedSequenceExec",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     _enable_py4j_nodelay(spark)
     return spark
 

@@ -111,18 +111,21 @@ def test_numbered_counter_is_64bit(spark):
     from hpcc_platform_spark.operators import global_row_number
 
     df = spark.range(10).select(F.col("id").alias("k"))
-    out = global_row_number(df, ["k"], name="rn", num_partitions=4)
+    out = global_row_number(df, ["k"], name="rn")
     assert dict(out.dtypes)["rn"] == "bigint"
 
 
 def test_numbering_cache_never_evicts_implicitly(spark):
-    """Implicit eviction is unsafe (a not-yet-consumed frame would
-    re-sample its range exchange → wrong global numbers): frames must stay
-    cached until release_numbering_caches(), with a ResourceWarning once
-    the outstanding count grows."""
+    """The global running ITERATE collects one aggregate per range
+    partition while the query is built, then reads the same partitions
+    again when the query runs. Its ranged frame must stay cached until
+    release_numbering_caches(): a frame dropped before its consumer ran
+    would re-sample its range exchange, so the collected prefixes would
+    belong to other partitions. Past the threshold a ResourceWarning is
+    given, never an eviction. Plain numbering caches nothing."""
     import warnings
 
-    from hpcc_platform_spark.operators import global_row_number
+    from hpcc_platform_spark.operators import global_row_number, iterate_running
     from hpcc_platform_spark.operators.numbering import (
         _WARN_THRESHOLD,
         _live_caches,
@@ -131,11 +134,13 @@ def test_numbering_cache_never_evicts_implicitly(spark):
 
     release_numbering_caches()
     df = spark.range(100).select(F.col("id").alias("k"))
+    global_row_number(df, ["k"]).count()
+    assert not _live_caches
     n = _WARN_THRESHOLD + 2
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         for _ in range(n):
-            global_row_number(df, ["k"], num_partitions=2).count()
+            iterate_running(df, ["k"], s=F.sum("k")).count()
     assert len(_live_caches) == n  # nothing evicted behind the consumer
     assert any(issubclass(w.category, ResourceWarning) for w in caught)
     release_numbering_caches()

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hpcc_platform_spark.eclfront import EclSyntaxError, run_ecl
+from hpcc_platform_spark.queries import REGISTRY
 
 
 @pytest.fixture(scope="module")
@@ -124,6 +125,63 @@ def test_join_types_keep_values_under_each_strategy(spark, how):
         ecl = _JOIN_SIDES + f"OUTPUT(JOIN(l, r, LEFT.k = RIGHT.k2{opts}));"
         got = sorted(tuple(r) for r in run_ecl(ecl, {}, spark=spark).collect())
         assert got == _JOIN_MODEL[how], (how, flag)
+
+
+def test_lookup_join_keeps_residual_and_blank_insensitive_keys(spark):
+    """LOOKUP without MANY keeps one RIGHT row per key, and still applies
+    the rest of the condition and ECL's trailing-blank string compare."""
+    sides = """
+    l := DATASET([{1, 'a'}, {2, 'b'}, {4, 'd'}], { unsigned k, string lv });
+    r := DATASET([{1, 'x'}, {2, 'y'}, {3, 'z'}], { unsigned k2, string rv });
+    """
+    model = sorted(
+        (k, lv, k2, rv)
+        for k, lv in [(1, "a"), (2, "b"), (4, "d")]
+        for k2, rv in [(1, "x"), (2, "y"), (3, "z")]
+        if k == k2 and rv != "x"
+    )
+    for flag in ("", ", LOOKUP", ", MANY LOOKUP"):
+        ecl = sides + (
+            "OUTPUT(JOIN(l, r, LEFT.k = RIGHT.k2 AND RIGHT.rv != 'x'"
+            f"{flag}));"
+        )
+        got = sorted(tuple(r) for r in run_ecl(ecl, {}, spark=spark).collect())
+        assert got == model, flag
+    padded = """
+    l := DATASET([{'a', 1}, {'bb', 2}, {'c', 3}], { string3 k, unsigned lv });
+    r := DATASET([{'a', 'x'}, {'bb', 'y'}, {'d', 'z'}], { string k2, string rv });
+    """
+    model = [("a  ", 1, "a", "x"), ("bb ", 2, "bb", "y")]
+    for flag in ("", ", LOOKUP"):
+        ecl = padded + f"OUTPUT(JOIN(l, r, LEFT.k = RIGHT.k2{flag}));"
+        got = sorted(tuple(r) for r in run_ecl(ecl, {}, spark=spark).collect())
+        assert got == model, flag
+    # RIGHT keys equal but for trailing blanks are one key: LOOKUP keeps
+    # one of them, MANY LOOKUP both
+    dup = """
+    l := DATASET([{'a', 1}], { string k, unsigned lv });
+    r := DATASET([{'a', 'x'}, {'a ', 'y'}], { string k2, string rv });
+    """
+    for flag, n in ((", LOOKUP", 1), (", MANY LOOKUP", 2)):
+        ecl = dup + f"OUTPUT(JOIN(l, r, LEFT.k = RIGHT.k2{flag}));"
+        assert run_ecl(ecl, {}, spark=spark).count() == n, flag
+
+
+def test_combine_of_a_tied_frame_with_itself_pairs_each_row(spark):
+    """COMBINE(s, s) numbers each side in its own branch; with ties on the
+    SORT key, each position must still pair a row with itself."""
+    rows = [(i % 3, f"v{i}") for i in range(12)]
+    lits = ", ".join("{%d, '%s'}" % r for r in rows)
+    ecl = f"""
+    d := DATASET([{lits}], {{ unsigned k, string v }});
+    s := SORT(d, k);
+    pr := RECORD unsigned k; string a; string b; END;
+    OUTPUT(COMBINE(s, s, TRANSFORM(pr, SELF.k := LEFT.k; SELF.a := LEFT.v;
+                                   SELF.b := RIGHT.v)));
+    """
+    got = [tuple(r) for r in run_ecl(ecl, {}, spark=spark).collect()]
+    assert sorted(got) == sorted((k, v, v) for k, v in rows)
+    assert [k for k, _a, _b in got] == sorted(k for k, _v in rows)
 
 
 def _join_hints(df) -> list[str]:
@@ -523,17 +581,17 @@ def _run_v(spark, ecl: str) -> list[str]:
 
 @pytest.fixture
 def numbering_calls(monkeypatch):
-    """Counts two-phase numbering passes started while a query is built."""
+    """Counts the global numberings planned while a query is built."""
     from hpcc_platform_spark.operators import numbering
 
     calls = []
-    orig = numbering.numbered
+    orig = numbering.global_row_number
 
     def counting(*args, **kwargs):
         calls.append(args[1])
         return orig(*args, **kwargs)
 
-    monkeypatch.setattr(numbering, "numbered", counting)
+    monkeypatch.setattr(numbering, "global_row_number", counting)
     return calls
 
 
@@ -670,28 +728,29 @@ def test_dedup_keep_count_constant_or_computed(spark):
         assert got == ["a", "b", "d", "e", "f"], n
 
 
-def test_merge_sample_construction_job_budget(spark, sf_dir):
-    """Building ecl_front_merge_sample runs one numbering pass (SAMPLE's)
-    and nothing else: MERGE reads its SORTed inputs unsorted, so their
-    range samplings are gone. At most 5 Spark jobs, down from 9 when the
-    inputs were sorted and 21 when MERGE numbered every input."""
-    from hpcc_platform_spark.operators.numbering import (
-        release_numbering_caches,
-    )
-    from hpcc_platform_spark.queries import REGISTRY, tables
+@pytest.mark.parametrize(
+    "name", sorted(n for n in REGISTRY if n.startswith("ecl_front_"))
+)
+def test_ecl_front_construction_job_budget(spark, sf_dir, name):
+    """Building an ecl_front_* query starts no Spark job: MERGE reads its
+    SORTed inputs unsorted, and SAMPLE's numbering is a sort plus a
+    distributed sequence inside the plan (it was 21 jobs for
+    merge_sample when MERGE numbered every input, then 9, then 5)."""
+    from hpcc_platform_spark.queries import tables
+    from hpcc_platform_spark.session import TABLES
 
-    tables(spark, sf_dir, "orders")  # schema inference is not construction
+    tables(spark, sf_dir, *TABLES)  # schema inference is not construction
     sc = spark.sparkContext
-    group = "ecl_front_merge_sample-construct"
+    cached = sc._jsc.sc().getPersistentRDDs().size()
+    group = f"{name}-construct"
     sc.setJobGroup(group, group)
     try:
-        REGISTRY["ecl_front_merge_sample"].fn(spark, sf_dir)
+        REGISTRY[name].fn(spark, sf_dir)
     finally:
         sc._jsc.clearJobGroup()
-        release_numbering_caches()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= 5, len(jobs)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert sc._jsc.sc().getPersistentRDDs().size() == cached
 
 
 def test_limit_guard(spark, cat):
@@ -837,6 +896,63 @@ def test_denormalize_group_nests_children_in_input_order(spark):
             for r in out.collect()
         )
         assert got == want, flag
+
+
+def test_denormalize_group_applies_its_residual(spark):
+    """The residual conjuncts of an inline GROUP DENORMALIZE filter the
+    nested rows: RIGHT reads a child field (key included), LEFT a parent
+    field. A parent left with no child rows is childless (NULL)."""
+    defs = """
+    l := DATASET([{1, 'a'}, {2, 'b'}, {4, 'd'}], { unsigned k, string lv });
+    r := DATASET([{1, 'x'}, {1, 'y'}, {2, 'x'}, {2, 'w'}],
+                 { unsigned k2, string rv });
+    """
+    parents = [(1, "a"), (2, "b"), (4, "d")]
+    children = [(1, "x"), (1, "y"), (2, "x"), (2, "w")]
+    conds = {
+        "RIGHT.rv != 'x'": lambda p, c: c[1] != "x",
+        "RIGHT.k2 < 2 AND LEFT.lv != 'b'": lambda p, c: c[0] < 2
+        and p[1] != "b",
+        "RIGHT.rv > 'w' AND LEFT.k > 1": lambda p, c: c[1] > "w" and p[0] > 1,
+    }
+    for resid, keep in conds.items():
+        out = run_ecl(
+            defs
+            + f"OUTPUT(DENORMALIZE(l, r, LEFT.k = RIGHT.k2 AND {resid}, GROUP,"
+            " TRANSFORM(SELF.items := ROWS(RIGHT), SELF := LEFT)));",
+            {},
+            spark=spark,
+        )
+        got = sorted(
+            (r.k, r.lv, [e.rv for e in r["items"]] if r["items"] else None)
+            for r in out.collect()
+        )
+        want = []
+        for p in parents:
+            kids = [c[1] for c in children if c[0] == p[0] and keep(p, c)]
+            want.append((*p, kids or None))
+        assert got == want, resid
+
+
+def test_missed_dictionary_probe_gives_the_type_zero(spark):
+    """A probe that misses a dictionary without DEFAULT reads the value
+    type's zero: 0 for DECIMAL and INTEGER4 payloads, 0.0 for REAL4."""
+    from decimal import Decimal
+
+    for ty, hit, zero in (
+        ("DECIMAL10_2", Decimal("1.50"), Decimal("0.00")),
+        ("INTEGER4", 7, 0),
+        ("REAL4", 2.5, 0.0),
+    ):
+        ecl = f"""
+        ds := DATASET([{{1, {hit}}}], {{ unsigned k => {ty} v }});
+        d := DICTIONARY(ds);
+        src := DATASET([{{1}}, {{3}}], {{ unsigned q }});
+        OUTPUT(PROJECT(src, TRANSFORM({{ unsigned q; {ty} v; }},
+            SELF.q := LEFT.q; SELF.v := d[LEFT.q].v)));
+        """
+        got = [r.v for r in run_ecl(ecl, {}, spark=spark).collect()]
+        assert got == [hit, zero], ty
 
 
 def test_denormalize_named_fold_matches_python_model(spark):

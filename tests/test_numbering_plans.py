@@ -1,4 +1,4 @@
-"""Two-phase global numbering: correctness + the no-single-partition plan gate.
+"""Global numbering: correctness + the no-single-partition plan gate.
 
 The scale contract (VERDICT r2 #1): no ordinal operator may plan an
 ``Exchange SinglePartition`` (the 1-task WindowExec funnel). These tests
@@ -27,7 +27,7 @@ def _plan(df) -> str:
 
 def test_global_row_number_matches_enumerate(spark):
     df = spark.range(0, 1000).withColumn("k", (F.col("id") * 37) % 1000)
-    out = global_row_number(df, ["k"], name="rn", num_partitions=8)
+    out = global_row_number(df, ["k"], name="rn")
     got = {r.k: r.rn for r in out.collect()}
     expect = {k: i + 1 for i, k in enumerate(sorted(got))}
     assert got == expect
@@ -38,6 +38,106 @@ def test_global_row_number_empty_input(spark):
     out = global_row_number(df, ["k"], name="rn")
     assert out.count() == 0
     assert "rn" in out.columns
+
+
+@pytest.fixture
+def four_partitions(spark):
+    """Four shuffle partitions that AQE may not coalesce, so the sequence
+    numbers several non-empty partitions (test inputs are KB-sized and
+    would otherwise coalesce into one)."""
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+    )
+    saved = [spark.conf.get(k) for k in keys]
+    spark.conf.set(keys[0], "4")
+    spark.conf.set(keys[1], "false")
+    yield
+    for k, v in zip(keys, saved):
+        spark.conf.set(k, v)
+
+
+def _numbered_model(spark, rows, order):
+    """Number ``rows`` (uid, k, v) by ``order``; return the rows by rank
+    and the number of non-empty partitions the sequence numbered."""
+    df = spark.createDataFrame(rows, "uid int, k int, v int")
+    out = global_row_number(df, order, name="rn").select(
+        "*", F.spark_partition_id().alias("pid")
+    )
+    got = out.collect()
+    assert sorted(r.rn for r in got) == list(range(1, len(rows) + 1))
+    return sorted(got, key=lambda r: r.rn), len({r.pid for r in got})
+
+
+def test_numbering_with_ties_spans_partitions(spark, four_partitions):
+    """Heavy ties on the only key: ranks are 1..N once each, in key order,
+    over several non-empty partitions."""
+    rows = [(i, i % 5, i % 3) for i in range(400)]
+    ranked, parts = _numbered_model(spark, rows, ["k"])
+    assert parts >= 2
+    assert [r.k for r in ranked] == sorted(k for _u, k, _v in rows)
+
+
+def test_numbering_skewed_first_key_matches_model(spark, four_partitions):
+    """90% of rows share the first key; the second key orders them."""
+    rows = [(i, 0 if i % 10 else i, 399 - i) for i in range(400)]
+    ranked, parts = _numbered_model(spark, rows, ["k", F.col("v").desc()])
+    assert parts >= 2
+    model = sorted(rows, key=lambda r: (r[1], -r[2]))
+    assert [r.uid for r in ranked] == [u for u, _k, _v in model]
+
+
+def test_numbering_empty_input_with_partitions(spark, four_partitions):
+    ranked, parts = _numbered_model(spark, [], ["k"])
+    assert ranked == [] and parts == 0
+
+
+def test_tied_numbering_self_joined_on_rank(spark, four_partitions):
+    """Each read of a numbered frame runs its own sort and sequence, so
+    two branches agree on the ranks only under a total order. Self-join a
+    frame with heavy ties on its rank: total_order makes every rank pair a
+    row with itself, as the Python model does."""
+    from hpcc_platform_spark.operators.numbering import total_order
+
+    rows = [(i, i % 3, (i * 7) % 5) for i in range(300)]
+    df = spark.createDataFrame(rows, "uid int, k int, v int")
+    n = global_row_number(df, total_order(df, ["k"]), name="rn")
+    a = n.select("rn", *[F.col(c).alias(f"a_{c}") for c in df.columns])
+    b = n.select("rn", *[F.col(c).alias(f"b_{c}") for c in df.columns])
+    got = sorted(
+        (r.rn, r.a_uid, r.a_k, r.a_v, r.b_uid, r.b_k, r.b_v)
+        for r in a.join(b, "rn").collect()
+    )
+    model = sorted(rows, key=lambda r: (r[1], r[0], r[2]))
+    assert got == [(i + 1, *r, *r) for i, r in enumerate(model)]
+
+
+def test_building_a_numbering_starts_no_job_and_caches_nothing(spark):
+    sc = spark.sparkContext
+    cached = sc._jsc.sc().getPersistentRDDs().size()
+    df = spark.range(0, 5000).withColumn("k", (F.col("id") * 37) % 4999)
+    group = "numbering-construct"
+    sc.setJobGroup(group, group)
+    try:
+        out = enth(project_counter(df, ["k"]), 7, ["k"])
+        out = selectnth(out, 3, ["k"])
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert out.count() == 1
+    # the sequence's RDD cache is dropped when the execution ends
+    assert sc._jsc.sc().getPersistentRDDs().size() == cached
+
+
+def test_filter_stays_above_the_sequence(spark):
+    """A filter on the rank must not move below the sequence (it would
+    renumber the surviving rows)."""
+    df = spark.range(0, 100).withColumn("k", 99 - F.col("id"))
+    out = global_row_number(df, ["k"], name="rn").where(F.col("rn") <= 3)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.index("Filter") < plan.index("AttachDistributedSequence")
+    assert sorted(r.k for r in out.collect()) == [0, 1, 2]
 
 
 def test_selectnth_out_of_range_is_empty(spark):
@@ -126,7 +226,7 @@ def test_registry_single_partition_exchanges_carry_only_partials(spark, sf_dir):
     partials (one row per upstream task) into a 1-row final aggregate.
     Every declared query must either plan no single-partition exchange at
     all, or every such exchange's child must be a partial Hash/Sort
-    aggregate. Pins the r17 funnel-removal work (numbering two-phase,
+    aggregate. Pins the r17 funnel-removal work (global numbering,
     MERGE/SAMPLE/ENTH ordinals, sequence packing, correlated re-base)
     against regression anywhere in the registry."""
     import re

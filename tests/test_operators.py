@@ -500,30 +500,6 @@ def test_dedup_clusters_raises_when_diameter_exceeds_max_iters(spark):
     assert {r.canonical_id for r in ok.collect()} == {0}
 
 
-def test_numbering_scope_releases_only_inner_caches(spark):
-    """numbering_scope bounds executor storage deterministically: frames
-    tracked inside the scope are released on exit, outer ones are kept."""
-    from hpcc_platform_spark.operators.numbering import (
-        _live_caches,
-        global_row_number,
-        numbering_scope,
-        release_numbering_caches,
-    )
-
-    release_numbering_caches()
-    df = spark.range(100).selectExpr("id", "id % 7 as k")
-    outer = global_row_number(df, ["k", "id"])
-    outer.count()  # materialize the outer consumer
-    n_outer = len(_live_caches)
-    assert n_outer >= 1
-    with numbering_scope():
-        inner = global_row_number(df, ["id"])
-        assert inner.count() == 100
-        assert len(_live_caches) > n_outer
-    assert len(_live_caches) == n_outer  # inner released, outer kept
-    release_numbering_caches()
-
-
 def test_q6_shape_pushdown_single_scan(spark, sf_dir):
     """Q6 shape (workload_forecast_revenue): one parquet scan with the
     date/discount/quantity predicates pushed into it, no join nodes, and

@@ -15,34 +15,27 @@ def _executed_plan(df) -> str:
 
 
 def test_numbered_plans_single_exchange(spark):
-    """numbered() must range-exchange once and NOT re-shuffle by __pid__
-    (the pre-r17 window lowering added Exchange hashpartitioning(__pid__))."""
-    from hpcc_platform_spark.operators.numbering import (
-        numbered,
-        release_numbering_caches,
-    )
+    """global_row_number must range-exchange once and NOT re-shuffle (the
+    pre-r17 window lowering added Exchange hashpartitioning(__pid__))."""
+    from hpcc_platform_spark.operators.numbering import global_row_number
 
     df = spark.range(0, 5000).withColumn("k", (F.col("id") * 37) % 4999)
-    out, total = numbered(df, ["k"], name="rn", num_partitions=8)
+    out = global_row_number(df, ["k"], name="rn")
     plan = _executed_plan(out)
-    assert total == 5000
-    assert "hashpartitioning(__pid__" not in plan
+    assert out.count() == 5000
+    assert plan.count("Exchange rangepartitioning") == 1
+    assert "hashpartitioning" not in plan
     assert "SinglePartition" not in plan
     assert "Window" not in plan
-    release_numbering_caches()
+    assert "AttachDistributedSequence" in plan
 
 
 def test_numbered_ties_are_dense_and_complete(spark):
     """Heavy ties: every rank 1..N exactly once, ordered by the key."""
-    from hpcc_platform_spark.operators.numbering import (
-        numbered,
-        release_numbering_caches,
-    )
+    from hpcc_platform_spark.operators.numbering import global_row_number
 
     df = spark.range(0, 2000).withColumn("k", F.col("id") % 7)
-    out, _ = numbered(df, ["k"], name="rn", num_partitions=8)
-    rows = out.select("k", "rn").collect()
-    release_numbering_caches()
+    rows = global_row_number(df, ["k"], name="rn").select("k", "rn").collect()
     assert sorted(r.rn for r in rows) == list(range(1, 2001))
     by_rank = [r.k for r in sorted(rows, key=lambda r: r.rn)]
     assert by_rank == sorted(by_rank)

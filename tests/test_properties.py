@@ -193,7 +193,7 @@ def test_global_row_number_matches_sorted_enumerate(spark, rows):
     df = spark.createDataFrame(
         [(i, k, v) for i, (k, v) in enumerate(rows)], "uid int, k int, v int"
     ) if rows else spark.createDataFrame([], "uid int, k int, v int")
-    out = global_row_number(df, ["k", "v", "uid"], name="rn", num_partitions=4)
+    out = global_row_number(df, ["k", "v", "uid"], name="rn")
     got = {r.uid: r.rn for r in out.collect()}
     order = sorted(range(len(rows)), key=lambda i: (rows[i][0], rows[i][1], i))
     expect = {uid: pos + 1 for pos, uid in enumerate(order)}
