@@ -1780,3 +1780,110 @@ def test_set_dataset_form_runs_one_job(spark):
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, src
         assert one.select(col.alias("s")).head().s == want, src
+
+
+def test_integer_fields_keep_their_sign(spark):
+    """An inline -7 stored in an INTEGERn field stays -7; an UNSIGNEDn
+    field wraps it to 2^(8n) - 7, the Python model of both."""
+
+    def model(ty):
+        n = int(ty[len(ty.rstrip("0123456789")):])
+        if ty.startswith("UNSIGNED"):
+            return -7 % (1 << 8 * n)
+        return -7
+
+    for ty in ("INTEGER2", "INTEGER4", "INTEGER8", "UNSIGNED4", "UNSIGNED8"):
+        ecl = f"OUTPUT(DATASET([{{1, -7}}], {{ unsigned4 k, {ty} v }}));"
+        got = [r.v for r in run_ecl(ecl, {}, spark=spark).collect()]
+        assert got == [model(ty)], ty
+
+
+_U64_SRC = """
+src := DATASET([{18446744073709551615}, {9223372036854775808}, {5}],
+    { UNSIGNED8 u });
+"""
+_U64_VALS = [2**64 - 1, 2**63, 5]
+
+
+def test_unsigned8_compares_and_sorts_in_unsigned_order(spark):
+    """UNSIGNED8 values at or above 2^63 are held as their signed-long
+    bit pattern; compares (against fields and exact constants) and
+    SORT keys still order them as unsigned, like the Python model."""
+    import operator
+
+    ops = {"=": operator.eq, "!=": operator.ne, "<": operator.lt,
+           "<=": operator.le, ">": operator.gt, ">=": operator.ge}
+    for op, k in (
+        (">", 0), ("=", 2**64 - 1), (">", 2**63 - 1), ("<", 2**63),
+        (">=", 5), ("!=", 5), ("<=", 2**63),
+    ):
+        ecl = _U64_SRC + f"OUTPUT(COUNT(src(u {op} {k})));"
+        want = sum(ops[op](u, k) for u in _U64_VALS)
+        assert run_ecl(ecl, {}, spark=spark).head()[0] == want, (op, k)
+    ecl = _U64_SRC + "OUTPUT(COUNT(JOIN(src, src, LEFT.u < RIGHT.u, ALL)));"
+    want = sum(a < b for a in _U64_VALS for b in _U64_VALS)
+    assert run_ecl(ecl, {}, spark=spark).head()[0] == want
+    for key, want in (("u", sorted(_U64_VALS)),
+                      ("-u", sorted(_U64_VALS, reverse=True)),
+                      ("{u}", sorted(_U64_VALS))):
+        ecl = _U64_SRC + f"OUTPUT(SORT(src, {key}));"
+        got = [int(r.u) for r in run_ecl(ecl, {}, spark=spark).collect()]
+        assert got == want, key
+
+
+def test_column_facts_hold_no_column_alive(spark):
+    """The parser's Column facts are held weakly: a tagged constant, a
+    string field and an array field keep their facts while they live,
+    and their entries go once the Columns are collected."""
+    import gc
+
+    from hpcc_platform_spark import eclfront
+
+    defs = """
+    krec := { unsigned n };
+    ds := DATASET([{'a', 7, [{1}]}],
+        { string3 s; UNSIGNED8 u; DATASET(krec) kids; });
+    OUTPUT(ds);
+    """
+    p = eclfront._Parser(eclfront._lex(defs), {}, None, spark, src=defs)
+    p.program()
+    ds = p.env["ds"]
+    gc.collect()
+    n0 = len(p._col_facts)
+    const = p._mkconst(7, "integer4")
+    s = p._field_col(ds, "s")
+    u = p._field_col(ds, "u")
+    kids = p._tag_arr(ds["kids"])
+    p._register_arr_fields(kids, ds, "kids")
+    assert p._cget(const) == (7, "integer4")
+    assert p._is_strcol(s)
+    assert p._cfacts(u).kind == "u64"
+    assert p._cfacts(kids).kind == "array"
+    assert [f[0] for f in p._cfacts(kids).elem_fields] == ["n"]
+    assert len(p._col_facts) == n0 + 4
+    del const, s, u, kids
+    gc.collect()
+    assert len(p._col_facts) == n0
+    assert p._cfacts(ds["s"]).kind is None
+
+
+def test_dictionary_probe_over_a_child_append_reads_its_arity(spark):
+    """(RIGHT.c + LEFT.c) of two DICTIONARY-typed children keeps the
+    element fields and key arity: a [key] probe reads the first hit's
+    payload, and IN tests the key field only."""
+    ecl = """
+    prec := RECORD
+      unsigned id;
+      DICTIONARY({ string1 k => string2 v }) c;
+    END;
+    ds := DATASET([{1, [{'a', 'x1'}, {'b', 'y1'}]},
+                   {2, [{'c', 'z2'}, {'a', 'w2'}]}], prec);
+    OUTPUT(JOIN(ds, ds, LEFT.id + 1 = RIGHT.id,
+        TRANSFORM({ unsigned id; string2 va; boolean inb; boolean inv; },
+            SELF.id := LEFT.id;
+            SELF.va := (RIGHT.c + LEFT.c)['a'].v;
+            SELF.inb := 'b' IN (RIGHT.c + LEFT.c);
+            SELF.inv := 'x1' IN (RIGHT.c + LEFT.c))));
+    """
+    got = [tuple(r) for r in run_ecl(ecl, {}, spark=spark).collect()]
+    assert got == [(1, "w2", True, False)]

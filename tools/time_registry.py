@@ -1,5 +1,6 @@
-"""Time EVERY registry query at $SPARK_GRAFT_SF_DIR with the bench
-methodology (one warm pass + N timed noop runs, min reported), error- and
+"""Time registry queries at $SPARK_GRAFT_SF_DIR with the bench
+methodology (one warm pass + N timed noop runs, min and median reported):
+the named ones, or EVERY query when no name is given. Error- and
 slow-tolerant: a query that raises is recorded as ERR and the sweep
 continues. Output: one line per query to stdout + a sorted summary.
 
@@ -41,9 +42,14 @@ def main() -> None:
                 t0 = time.perf_counter()
                 fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
                 runs.append(time.perf_counter() - t0)
-            best = min(runs)
+            srt = sorted(runs)
+            best = srt[0]
             results.append((best, name))
-            print(f"TIMER {name}: min={best:.3f} runs={[round(r, 3) for r in runs]}", flush=True)
+            print(
+                f"TIMER {name}: min={best:.3f} med={srt[len(srt) // 2]:.3f} "
+                f"runs={[round(r, 3) for r in runs]}",
+                flush=True,
+            )
         except Exception as exc:  # noqa: BLE001 - sweep must survive one bad query
             results.append((float("nan"), name))
             print(f"ERR {name}: {type(exc).__name__}: {str(exc).splitlines()[0][:200]}", flush=True)
